@@ -562,28 +562,14 @@ object Dedup {
         lit(0).cast("decimal(38,0)")).as("h"),
       coalesce(sum(col("u").cast("decimal(38,0)") + col("v").cast("decimal(38,0)")),
         lit(0).cast("decimal(38,0)")).as("s"))
-    // Round-block hygiene (localCheckpoint mode): every materialized round
-    // pins blocks in the block manager; only the first (node universe) and
-    // final (labels) rounds are read after the loop, so superseded rounds
-    // are unpersisted on exit. Id tracking is a before/after snapshot diff
-    // — assumes no concurrent materialization on the same session (holds
-    // for the library's single-query call pattern).
-    val sc = edges.sparkSession.sparkContext
-    val localMode =
-      edges.sparkSession.conf.getOption("spark.graft.silver.dir").isEmpty
-    val roundIds = scala.collection.mutable.ArrayBuffer[Set[Int]]()
     // Per-INVOCATION uid in every round name: the round content depends on
     // the edges argument (dupClusters, gridClusterQuery, semanticKeep all
     // drive this with different edge sets), so fixed cc_iter_N names would
     // let two CC runs sharing one spark.graft.silver.dir overwrite each
     // other's rounds mid-loop.
     val ccUid = java.util.UUID.randomUUID().toString.take(8)
-    def materializeRound(df: DataFrame, name: String): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = Silver.materialize(df, s"cc_${ccUid}_$name")
-      if (localMode) roundIds += (sc.getPersistentRDDs.keySet.toSet -- before)
-      out
-    }
+    def materializeRound(df: DataFrame, name: String): DataFrame =
+      Silver.materialize(df, s"cc_${ccUid}_$name")
     // The raw round keeps self-loops: they don't connect anything, but
     // their endpoints ARE nodes and must appear in the output (labeled as
     // their own singleton component), matching a union-find reference.
@@ -609,10 +595,15 @@ object Dedup {
       // materialize per round: iterative plans otherwise stack the whole
       // history into one lineage (exponential re-execution under AQE)
       val obs = new org.apache.spark.sql.Observation(s"cc_round_$i")
-      cur = materializeRound(
+      val next = materializeRound(
         smallStar(largeStar(cur, bc), bc)
           .observe(obs, checksumAggs.head, checksumAggs.tail: _*),
         s"iter_$i")
+      // Round-block hygiene: only the first (node universe) and final
+      // (labels) rounds are read after the loop, so a superseded round
+      // is freed as soon as its successor is materialized.
+      if (i > 1) Silver.release(cur)
+      cur = next
       val r = obs.get
       val cs = (r("c").asInstanceOf[Long],
         BigDecimal(r("h").asInstanceOf[java.math.BigDecimal]),
@@ -621,11 +612,6 @@ object Dedup {
       prev = Some(cs)
     }
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    if (localMode && roundIds.length > 2) {
-      val keep = roundIds.head ++ roundIds.last
-      roundIds.slice(1, roundIds.length - 1).flatten.filterNot(keep).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
     // Stars point node→min; centers and isolated/self-loop-only nodes
     // map to themselves.
     cur.select(col("u").as("node"), col("v").as("component"))
@@ -776,53 +762,28 @@ object Dedup {
     prefixPairsOver(sh, tauNum = 1, tauDen = 2).select("d1", "d2")
   }
 
-  /** Session-scoped cache of the three blocking-audit inputs — the 8-hash
-    * signature table, the exact shingle-Jaccard ≥ 1/2 PPJoin truth set,
-    * and the width-2 band-collision candidates (q_blocking_eval's band
-    * stage IS q_band_sweep's cand2, since BandWidth = 2). The two audits
+  /** The three blocking-audit inputs — the 8-hash signature table, the
+    * exact shingle-Jaccard ≥ 1/2 PPJoin truth set, and the width-2
+    * band-collision candidates (q_blocking_eval's band stage IS
+    * q_band_sweep's cand2, since BandWidth = 2) — as parquet
+    * [[Silver.corpusScaffold]]s of the documents table. The two audits
     * grade the SAME blocking scheme against the SAME ground truth; at
     * 100 TB each of these is a persisted silver table built once and read
     * by every audit, so rebuilding the PPJoin per query would be the
-    * wrong production shape, not just a slow one. Keyed by (session, dir)
-    * so different corpora (sf sweeps, the 10× inflation, test fixtures)
-    * never cross-contaminate, and a restarted session never sees another
-    * session's dead checkpoint blocks. Deterministic content → cache
-    * reuse cannot change results.
+    * wrong production shape, not just a slow one. Deterministic content
+    * → cache reuse cannot change results.
     *
-    * Persisted as PARQUET in a per-JVM temp dir, NOT localCheckpoint:
-    * callers (graft.Bench) unpersist all checkpoint RDDs between
-    * queries, which would silently kill a checkpoint-backed cache; a
-    * parquet silver table survives that and is the real 100 TB shape.
-    * Written with 16-way repartition so the read-back never scans as
-    * the one-partition file that would serialize downstream joins. */
-  private val auditCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  private lazy val auditTmpBase: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_audit_silver_")
-
-  /** Unique suffix per cached table: hashCode-keyed paths could collide
-    * across distinct corpus dirs (String hashes do collide), silently
-    * overwriting a LIVE silver table another cached frame still reads.
-    * A monotone counter makes every build's path fresh by construction;
-    * the sanitized dir tail rides along for debuggability only. */
-  private val auditPathSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
+    * Parquet, NOT localCheckpoint: callers (graft.Bench) unpersist all
+    * checkpoint RDDs between queries, which would silently kill a
+    * checkpoint-backed cache. Written with 16-way repartition so the
+    * read-back never scans as the one-partition file that would
+    * serialize downstream joins. */
   private def cachedAudit(spark: SparkSession, dir: String, what: String)
-                         (build: => DataFrame): DataFrame = {
-    // The content signature (file lengths + mtimes, the Tables fan-probe
-    // device) rides in the cache key so a corpus REWRITTEN in place at
-    // the same dir within one session re-builds instead of silently
-    // serving the previous corpus's signatures/truth/candidates.
-    val sig = graft.sources.Tables.contentSignature(s"$dir/documents.parquet")
-    auditCache.getOrElseUpdate((spark, s"$dir#$sig", what), {
-      val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(32)
-      val path = auditTmpBase.resolve(
-        s"${what}_${auditPathSeq.incrementAndGet()}_$tag").toString
-      build.repartition(16).write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    })
-  }
+                         (build: => DataFrame): DataFrame =
+    spark.read.parquet(
+      Silver.corpusScaffold(dir, "documents", s"audit_$what") { path =>
+        build.repartition(16).write.parquet(path)
+      })
 
   // The builds are passed RAW: cachedAudit's own parquet write is the
   // materialization, so an inner Silver.materialize/scratch wrapper

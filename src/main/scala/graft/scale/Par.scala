@@ -20,20 +20,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (REPARTITION_BY_NUM — AQE respects user-given counts) right before
   * the explosive operator. The count is scale-adaptive, not a constant:
   * `defaultParallelism` tracks the cluster size (local[$cpus] here,
-  * total executor cores on a cluster), overridable per deployment via
-  * `spark.graft.par.width` (e.g. set 2-3× total cores on a cluster per
-  * the shuffle-partition sizing rule). The repartition itself moves only
+  * total executor cores on a cluster). The repartition itself moves only
   * the SMALL pre-explosion frame, so its cost is noise next to the
   * parallelism it buys; at 100 TB the same hint merely confirms the
   * parallelism AQE would pick once input bytes are large.
   */
 object Par {
 
-  def width(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    spark.conf.getOption("spark.graft.par.width").map(_.trim.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-  }
+  def width(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
 
   /** Hash-repartition `df` to [[width]] partitions on `keys` — the
     * pre-explosion fan. Deterministic (hash of the key columns, no

@@ -1,24 +1,34 @@
 package graft.scale
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Materialization point for intermediates that feed multiple plan
-  * branches (shingle rows, LSH signatures, ANN index assignments).
+/** The one owner of materialized intermediates: how they are stored,
+  * reused and freed.
   *
-  * Self-joins and banding re-execute the producing subtree once per plan
-  * branch (~10× for the signature joins), so these frames must be
-  * materialized once. Two strategies:
+  * Query-scoped intermediates that feed multiple plan branches (shingle
+  * rows, LSH signatures, ANN index assignments, iterative rounds) go
+  * through [[materialize]]: self-joins and banding re-execute the
+  * producing subtree once per plan branch (~10× for the signature
+  * joins), so these frames must be materialized once. Two strategies:
   *
   *  - default: eager `localCheckpoint` — fast, zero I/O setup, right for
   *    a single-JVM/local run. NOT fault-tolerant: executor-local blocks
   *    die with the executor, so on a real cluster a lost node kills the
-  *    job instead of recomputing.
+  *    job instead of recomputing. [[release]] frees the checkpoint blocks
+  *    of a round an iterative operator has superseded.
   *  - `spark.graft.silver.dir` set: write-then-read a parquet silver
   *    table under that directory — the production path. Survives executor
   *    loss, is inspectable/reusable across jobs, and scans back columnar.
+  *    [[release]] leaves such tables alone.
   *
   * The strategy is a session conf (not a parameter) so the choice is a
   * deployment decision, not plumbed through every operator signature.
+  *
+  * Corpus-derived scaffolds — files that are a pure function of one
+  * corpus table (stream-replay slices, the clubs JSON documents, the
+  * blocking-audit tables) — go through [[corpusScaffold]]: built once per
+  * table content, reused while the table is unchanged, deleted at exit.
   */
 object Silver {
 
@@ -44,4 +54,60 @@ object Silver {
     * reusable across jobs (e.g. minhash signatures) keep fixed names. */
   def scratch(df: DataFrame, prefix: String): DataFrame =
     materialize(df, s"${prefix}_${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** Free the checkpoint blocks behind a frame [[materialize]] returned
+    * (its `LogicalRDD` leaf) once nothing will read it again. A parquet
+    * silver table has no such leaf and is left as it is. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** Built scaffolds: (corpus dir, name) → (table signature, directory). */
+  private val scaffolds =
+    scala.collection.mutable.Map.empty[(String, String), (Long, String)]
+
+  private val scaffoldSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Per-JVM root of every scaffold directory, deleted by one shutdown
+    * hook (File.deleteOnExit is a no-op on a non-empty directory). */
+  private lazy val scaffoldRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scaffold_")
+    sys.addShutdownHook(deleteTree(root.toFile))
+    root
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
+  /** Directory of files derived from `<dir>/<table>.parquet`, cached
+    * under `(dir, name)`. `write` is called with a fresh directory path
+    * when there is no cached directory or the table's content signature
+    * ([[graft.sources.Tables.contentSignature]]: every file's length and
+    * mtime) has changed, e.g. a corpus rewritten in place. A superseded
+    * directory stays on disk until exit: Spark reads are lazy, so a frame
+    * handed out before the rewrite may still read it. The builds are
+    * serialized, and a `write` may itself ask for another scaffold. */
+  def corpusScaffold(dir: String, table: String, name: String)
+                    (write: String => Unit): String = {
+    val sig = graft.sources.Tables.contentSignature(s"$dir/$table.parquet")
+    scaffolds.synchronized {
+      scaffolds.get((dir, name)) match {
+        case Some((s, path)) if s == sig => path
+        case _ =>
+          val path = scaffoldRoot
+            .resolve(s"graft_${name}_${scaffoldSeq.incrementAndGet()}").toString
+          write(path)
+          scaffolds((dir, name)) = (sig, path)
+          path
+      }
+    }
+  }
+
+  /** The current scaffold directory under `(dir, name)`, if one was built. */
+  private[graft] def scaffoldFor(dir: String, name: String): Option[String] =
+    scaffolds.synchronized(scaffolds.get((dir, name)).map(_._2))
 }

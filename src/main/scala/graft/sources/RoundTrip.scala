@@ -448,45 +448,9 @@ object RoundTrip {
     * synthesize pages in-plan and never touch the reader. One document
     * per nation; the write is `partitionBy` (one file per key) so no
     * row ever crosses the driver, and the inner object goes through
-    * `to_json` for correct escaping. */
-  /** Written JSON scaffolding cached per (session, corpus, content):
-    * the files are a pure function of the nation table, so each
-    * Verify/Bench call re-writing (and leaking) a fresh temp dir was
-    * waste — one dir per corpus content per JVM. The key folds in the
-    * nation table's content signature so an in-place rewrite of the
-    * corpus within one JVM misses the cache (same staleness guard as
-    * Dedup.cachedAudit). Cleanup is a real recursive delete in a
-    * shutdown hook — File.deleteOnExit on a non-empty directory is a
-    * no-op. */
-  // One CACHED scaffold per (session, corpus dir): a superseding content
-  // signature evicts the previous dir from the cache but leaves its
-  // files on disk until exit — lazily-read DataFrames handed out before
-  // the rewrite may still reference them (r13 ADVICE; r12's per-content
-  // keying leaked a dir per distinct content, r13's eager delete broke
-  // pre-rewrite readers). Exit cleanup is ONE JVM-wide hook draining
-  // pendingCleanup, which accumulates at most one dir per rewrite.
-  private val clubsJsonCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Long, String)]
-
-  private val pendingCleanup =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(rmTree)
-    f.delete(); ()
-  }
-
-  // lazy val: the hook registers exactly once, on first scaffold write.
-  // (File.deleteOnExit on a non-empty directory is a no-op, hence the
-  // real recursive delete.)
-  private lazy val cleanupHookInstalled: Boolean = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      pendingCleanup.forEach(d => rmTree(new java.io.File(d)))
-    }))
-    true
-  }
-
+    * `to_json` for correct escaping. The files are a pure function of
+    * the nation table, so they are a [[graft.scale.Silver.corpusScaffold]]:
+    * written once per table content and reused by every call. */
   def clubsJsonFromNations(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.nation(spark, dir)
     val doc = concat(
@@ -499,28 +463,9 @@ object RoundTrip {
       lit(",\n  \"active\": "),
       (pmod(col("n_nationkey"), lit(2)) === 0).cast("string"),
       lit("\n}"))
-    val sig = Tables.contentSignature(
-      java.nio.file.Paths.get(dir, "nation.parquet").toString)
-    val tmp = clubsJsonCache.synchronized {
-      clubsJsonCache.get((spark, dir)) match {
-        case Some((s, path)) if s == sig => path
-        case _ =>
-          // stale content: the superseded dir is only evicted from the
-          // CACHE here — its files stay readable until JVM exit (it
-          // remains in pendingCleanup for the shutdown hook). Spark
-          // reads are lazy, so a DataFrame handed out before the corpus
-          // rewrite may still reference the old scaffold; an eager
-          // delete (r13's first cut) failed such callers mid-job. The
-          // leak is bounded: one superseded dir per corpus rewrite
-          // within one JVM, each a few KB of JSON.
-          require(cleanupHookInstalled)
-          val t = java.nio.file.Files.createTempDirectory("graft_clubs_json")
-          pendingCleanup.add(t.toString)
-          n.select(col("n_nationkey").as("k"), doc.as("value"))
-            .write.partitionBy("k").mode("overwrite").text(t.toString)
-          clubsJsonCache.put((spark, dir), (sig, t.toString))
-          t.toString
-      }
+    val tmp = graft.scale.Silver.corpusScaffold(dir, "nation", "clubs_json") { t =>
+      n.select(col("n_nationkey").as("k"), doc.as("value"))
+        .write.partitionBy("k").text(t)
     }
     Bronze.readJsonSnapshots(spark, tmp)
       .select(

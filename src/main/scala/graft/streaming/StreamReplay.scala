@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Merge
+import graft.scale.Silver
 
 /** q_stream_upsert — the ORACLE-CHECKED streaming witness (SURVEY §2.10).
   *
@@ -59,67 +60,13 @@ object StreamReplay {
   /** Run the replay end-to-end and return the final state. The streaming
     * job executes eagerly inside this call (AvailableNow, awaited); the
     * result is localCheckpointed so the temp scaffolding can be deleted
-    * before the caller consumes it. */
-  /** Session-scoped cache of the mod-sliced input drops, keyed by
-    * corpus dir — the [[slicedInput]] pattern applied to the upsert
-    * replay (r14): the slices are a pure function of the data
-    * (`event_id mod Slices`), so re-slicing per invocation only re-paid
-    * scaffolding I/O (4 filter+coalesce+write jobs per run, measured
-    * ~1 s + two full events scans). The STREAM itself — checkpoint,
-    * micro-batch loop, merge state — still runs fresh every call. No
-    * mtime pinning needed here: the merge is associative/commutative,
+    * before the caller consumes it. The mod-sliced input drops are a
+    * pure function of the events table, so they are a
+    * [[Silver.corpusScaffold]] reused across calls; the STREAM itself —
+    * checkpoint, micro-batch loop, merge state — runs fresh every call.
+    * No mtime pinning needed here: the merge is associative/commutative,
     * so the final state is read-order-independent (the scaladoc's
     * determinism argument), unlike the windowed replay's watermark. */
-  private val upsertSliceCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
-
-  /** Input fingerprint for the slice caches (r15): md5 over the sorted
-    * (path, size, mtime) listing of the corpus' events table files. A
-    * same-JVM rewrite of the events table changes the fingerprint, so
-    * a stale slice set can never be replayed against new data — the
-    * cache key previously stopped at (session, dir). */
-  private def eventsFingerprint(dir: String): String = {
-    val root = java.nio.file.Paths.get(dir, "events.parquet")
-    val listing =
-      if (!java.nio.file.Files.exists(root)) "absent"
-      else {
-        val s = java.nio.file.Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(p => java.nio.file.Files.isRegularFile(p))
-            .map(p => s"$p:${java.nio.file.Files.size(p)}:" +
-              java.nio.file.Files.getLastModifiedTime(p).toMillis)
-            .toSeq.sorted.mkString("\n")
-        } finally s.close()
-      }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** Cached slice dirs are temp scaffolding: delete them when the JVM
-    * exits (they used to leak — r15, ADVICE). */
-  private val cachedSliceDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  locally {
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      cachedSliceDirs.asScala.foreach { d =>
-        val root = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(root)) {
-          val s = java.nio.file.Files.walk(root)
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala.toSeq.reverse
-              .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          } finally s.close()
-        }
-      }
-    }
-  }
-
-  private def trackSliceDir(d: String): String = { cachedSliceDirs.add(d); d }
-
   def streamUpsertQuery(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
@@ -127,17 +74,13 @@ object StreamReplay {
     val base = java.nio.file.Files.createTempDirectory("graft_stream_replay")
     val ckpt = base.resolve("ckpt")
     val state = base.resolve("state").toString
-    val in = upsertSliceCache.getOrElseUpdate(
-      (spark, dir, eventsFingerprint(dir)), {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_stream_replay_in")
+    val in = Silver.corpusScaffold(dir, "events", "stream_replay_in") { d =>
       (0 until Slices).foreach { k =>
         ev.filter(pmod(col("event_id"), lit(Slices)) === k)
           .coalesce(1) // one file per drop -> one micro-batch per drop
-          .write.parquet(d.resolve(s"slice_$k").toString)
+          .write.parquet(s"$d/slice_$k")
       }
-      trackSliceDir(d.toString)
-    })
+    }
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true")
@@ -167,6 +110,50 @@ object StreamReplay {
   val windowTriggers = new java.util.concurrent.atomic.AtomicInteger(0)
   val windowEmissions = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** State-store partitions of the window replay's stream (see
+    * [[streamWindowQuery]]): sized to the watermark-bounded state. */
+  private val WindowStatePartitions = 8
+
+  /** Scaffold name of the window replay's time-span slices. */
+  private val WindowSlices = "stream_window_in"
+
+  /** Current window-replay slice dir for a corpus, if one was built in
+    * this JVM — lets StreamingSpec assert the mtime pinning the
+    * read-order argument rests on. */
+  private[graft] def sliceDirFor(spark: SparkSession, dir: String): Option[String] =
+    Silver.scaffoldFor(dir, WindowSlices)
+
+  /** The time-span slices, a [[Silver.corpusScaffold]]: a pure function
+    * of the events table, so only the stream runs fresh per call. */
+  private def slicedInput(dir: String, ev: DataFrame): String =
+    Silver.corpusScaffold(dir, "events", WindowSlices) { in =>
+      val mm = ev.agg(min(col("ts_ms")), max(col("ts_ms"))).head()
+      // null min/max = empty events table: write the (empty) slices
+      // anyway so the stream runs and the query returns an empty
+      // result, matching the batch oracle, instead of MatchErroring.
+      val (tmin, tmax) =
+        if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
+      val span = math.max(1L, (tmax - tmin) / Slices + 1)
+      (0 until Slices).foreach { k =>
+        val slice = s"$in/slice_$k"
+        ev.filter(expr(s"(ts_ms - $tmin) div $span") === k)
+          .coalesce(1)
+          .write.parquet(slice)
+        // FileStreamSource orders new files by modification time; the
+        // watermark-monotonicity argument of streamWindowQuery needs
+        // slice_k to be READ k-th, and back-to-back writes can land on the same
+        // filesystem timestamp (1s granularity on some FS), leaving
+        // the tie to an unspecified sort order. Pin strictly
+        // increasing mtimes per slice so the read order is the slice
+        // order on any filesystem.
+        val t = java.nio.file.attribute.FileTime
+          .fromMillis(1000000000000L + k * 60000L)
+        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(slice))
+        try ls.forEach(p => java.nio.file.Files.setLastModifiedTime(p, t))
+        finally ls.close()
+      }
+    }
+
   /** q_stream_window — T7's ORACLE-CHECKED witness: a tumbling-window,
     * WATERMARKED event-time aggregation run as a real append-mode
     * Structured Streaming job (file source, one micro-batch per file
@@ -195,60 +182,11 @@ object StreamReplay {
     * micro-batch shuffles once on the window/type key with map-side
     * partial aggregation. The time-span slicing is replay scaffolding
     * (two driver-side scalars); production reads an actual stream. */
-  /** Session-scoped cache of the sliced input drops, keyed by corpus
-    * dir (the auditCache pattern, `scale/Dedup.scala`): the slices are
-    * a pure function of the data, so re-slicing per invocation (bench
-    * warmup + timed rep, repeated spec runs) only re-pays scaffolding
-    * I/O. The STREAM itself — checkpoint, watermark state, micro-batch
-    * loop, emissions — still runs fresh every call; only the input
-    * files are reused. Parquet on disk, so checkpoint drops can't
-    * invalidate it. */
-  private val sliceCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
-
-  /** Cached slice dir for a corpus, if one was built in this JVM —
-    * lets StreamingSpec assert the mtime pinning the read-order
-    * argument rests on. */
-  private[graft] def sliceDirFor(spark: SparkSession, dir: String): Option[String] =
-    sliceCache.collectFirst { case ((s, d, _), v) if s == spark && d == dir => v }
-
-  private def slicedInput(spark: SparkSession, dir: String,
-                          ev: DataFrame): String =
-    sliceCache.getOrElseUpdate((spark, dir, eventsFingerprint(dir)), {
-      val mm = ev.agg(min(col("ts_ms")), max(col("ts_ms"))).head()
-      // null min/max = empty events table: write the (empty) slices
-      // anyway so the stream runs and the query returns an empty
-      // result, matching the batch oracle, instead of MatchErroring.
-      val (tmin, tmax) =
-        if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
-      val span = math.max(1L, (tmax - tmin) / Slices + 1)
-      val in = java.nio.file.Files
-        .createTempDirectory("graft_stream_window_in")
-      (0 until Slices).foreach { k =>
-        ev.filter(expr(s"(ts_ms - $tmin) div $span") === k)
-          .coalesce(1)
-          .write.parquet(in.resolve(s"slice_$k").toString)
-        // FileStreamSource orders new files by modification time; the
-        // watermark-monotonicity argument above needs slice_k to be
-        // READ k-th, and back-to-back writes can land on the same
-        // filesystem timestamp (1s granularity on some FS), leaving
-        // the tie to an unspecified sort order. Pin strictly
-        // increasing mtimes per slice so the read order is the slice
-        // order on any filesystem.
-        val t = java.nio.file.attribute.FileTime
-          .fromMillis(1000000000000L + k * 60000L)
-        val ls = java.nio.file.Files.list(in.resolve(s"slice_$k"))
-        try ls.forEach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-        finally ls.close()
-      }
-      trackSliceDir(in.toString)
-    })
-
   def streamWindowQuery(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("ts_ms"),
         floor(col("value") * 100).cast("long").as("v"))
-    val in = slicedInput(spark, dir, ev)
+    val in = slicedInput(dir, ev)
     val base = java.nio.file.Files.createTempDirectory("graft_stream_window")
     val ckpt = base.resolve("ckpt")
     val results = base.resolve("results").toString
@@ -261,13 +199,9 @@ object StreamReplay {
     // ~5 micro-batches was paying (state partitions) × (HDFS state-store
     // open/commit) of pure file I/O — measured 2 × 33-task jobs per
     // batch with zero shuffle bytes, ~0.7 s each at 32 partitions.
-    // Parameterized for deployments with wider horizons; the cloned
-    // session leaves the caller's conf untouched.
-    val statePartitions = spark.conf
-      .getOption("spark.graft.stream.statePartitions").map(_.trim.toInt)
-      .getOrElse(8)
+    // The cloned session leaves the caller's conf untouched.
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", WindowStatePartitions.toString)
     // Created eagerly: if no window ever closes (events span < one
     // watermark delay + window), nothing is emitted and the read below
     // must return an EMPTY frame — the batch oracle's answer — not
